@@ -6,6 +6,13 @@ Reference: kgx/graph_operations/meta_knowledge_graph.py:51-1008
   count, count_by_source (508-600)
 - strict CURIE shape checks: category '^biolink:[A-Z][a-zA-Z]*$',
   predicate '^biolink:[a-z][a-z_]*$' (51-60); invalid records excluded.
+
+``meta_knowledge_graph`` makes one Spark action over two aggregates: a
+node-side one (category × stacked facet values, with the id-prefix set and
+the count on each category's sentinel row) and an edge-side one (the s-p-o
+category joins × stacked facet values, with the relation set and the count
+on each association's sentinel row) — see ``summary.facet_stack``. The
+per-statistic DataFrame helpers are views over the same two aggregates.
 """
 
 from __future__ import annotations
@@ -13,7 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from kgx_spark.operators.summary import node_category_catalog
+from kgx_spark.operators.summary import facet_columns, facet_stack, node_category_catalog
 
 CATEGORY_REGEX = r"^biolink:[A-Z][a-zA-Z]*$"  # meta_knowledge_graph.py:55
 PREDICATE_REGEX = r"^biolink:[a-z][a-z_]*$"  # meta_knowledge_graph.py:58
@@ -31,19 +38,34 @@ def _catalog_nodes(nodes: DataFrame) -> DataFrame:
     return nodes.dropDuplicates(["id"])
 
 
+def _node_aggregate(nodes: DataFrame, facets: list[str]) -> DataFrame:
+    """(category, _k, _n…) → id_prefixes, count over deduplicated nodes, one
+    row per DISTINCT valid category of a node (the reference appends a
+    category index only if not already present — :393-396); facet values
+    are non-NULL (:317-322)."""
+    catalog = _catalog_nodes(nodes)
+    return (
+        catalog.select(
+            F.split_part("id", F.lit(":"), F.lit(1)).alias("_prefix"),
+            F.explode(F.array_distinct("category")).alias("category"),
+            facet_stack(catalog, facets, "_n", outer=False).alias("_f"),
+        )
+        .where(F.col("category").rlike(CATEGORY_REGEX))
+        .select("_prefix", "category", F.explode("_f").alias("_f"))
+        .select("_prefix", "category", "_f.*")
+        .groupBy("category", *facet_columns(facets, "_n"))
+        .agg(
+            F.array_sort(F.collect_set(F.when(F.col("_k") < 0, F.col("_prefix")))).alias("id_prefixes"),
+            F.count("*").alias("count"),
+        )
+    )
+
+
 def meta_node_stats(nodes: DataFrame) -> DataFrame:
     """category → (id_prefixes sorted set, count) with invalid categories
     filtered out (meta_knowledge_graph.py:400-445). A node counts once per
-    DISTINCT category (the reference appends a category index only if not
-    already present — :393-396)."""
-    exploded = _catalog_nodes(nodes).select(
-        F.split_part("id", F.lit(":"), F.lit(1)).alias("prefix"),
-        F.explode(F.array_distinct("category")).alias("category"),
-    ).where(F.col("category").rlike(CATEGORY_REGEX))
-    return exploded.groupBy("category").agg(
-        F.array_sort(F.collect_set("prefix")).alias("id_prefixes"),
-        F.count("*").alias("count"),
-    )
+    DISTINCT category."""
+    return _node_aggregate(nodes, []).select("category", "id_prefixes", "count")
 
 
 def _meta_category_catalog(nodes: DataFrame) -> DataFrame:
@@ -54,9 +76,10 @@ def _meta_category_catalog(nodes: DataFrame) -> DataFrame:
     ).where(F.col("category").rlike(CATEGORY_REGEX))
 
 
-def meta_edge_stats(edges: DataFrame, nodes: DataFrame) -> DataFrame:
-    """(subject_category, predicate, object_category) → (relations set, count)
-    (meta_knowledge_graph.py:508-600). Invalid predicates excluded.
+def _edge_aggregate(edges: DataFrame, nodes: DataFrame, facets: list[str]) -> DataFrame:
+    """(subject_category, predicate, object_category, _k, _e…) → [relations],
+    count over valid-predicate edges INNER-joined to both endpoint category
+    catalogs (meta_knowledge_graph.py:508-600).
 
     The category catalog is id×category over ALL nodes — node-scale, so it
     must NOT be force-broadcast (a ~10⁹-row broadcast OOMs the driver at
@@ -64,35 +87,44 @@ def meta_edge_stats(edges: DataFrame, nodes: DataFrame) -> DataFrame:
     runtime when its measured size is small and shuffle-joins otherwise.
     """
     cats = _meta_category_catalog(nodes)
-    subj = cats.withColumnRenamed("id", "subject").withColumnRenamed("category", "subject_category")
-    obj = cats.withColumnRenamed("id", "object").withColumnRenamed("category", "object_category")
-    sel = ["subject", "predicate", "object"]
-    has_rel = "relation" in edges.columns
-    if has_rel:
-        sel.append("relation")
-    valid = edges.select(*sel).where(F.col("predicate").rlike(PREDICATE_REGEX))
-    joined = valid.join(subj, "subject").join(obj, "object")
+    rel = ["relation"] if "relation" in edges.columns else []
+    key = [
+        F.col("_s.category").alias("subject_category"),
+        "predicate",
+        F.col("_o.category").alias("object_category"),
+    ]
+    valid = edges.where(F.col("predicate").rlike(PREDICATE_REGEX)).select(
+        "subject", "predicate", "object", *rel,
+        facet_stack(edges, facets, "_e", outer=False).alias("_f"),
+    )
     aggs = [F.count("*").alias("count")]
-    if has_rel:
-        aggs.insert(0, F.array_sort(F.collect_set("relation")).alias("relations"))
-    return joined.groupBy("subject_category", "predicate", "object_category").agg(*aggs)
+    if rel:
+        aggs.insert(0, F.array_sort(
+            F.collect_set(F.when(F.col("_k") < 0, F.col("relation")))).alias("relations"))
+    return (
+        valid.join(cats.alias("_s"), F.col("subject") == F.col("_s.id"))
+        .join(cats.alias("_o"), F.col("object") == F.col("_o.id"))
+        .select(*key, *rel, F.explode("_f").alias("_f"))
+        .select("subject_category", "predicate", "object_category", *rel, "_f.*")
+        .groupBy("subject_category", "predicate", "object_category", *facet_columns(facets, "_e"))
+        .agg(*aggs)
+    )
+
+
+def meta_edge_stats(edges: DataFrame, nodes: DataFrame) -> DataFrame:
+    """(subject_category, predicate, object_category) → (relations set, count)
+    (meta_knowledge_graph.py:508-600). Invalid predicates excluded."""
+    return _edge_aggregate(edges, nodes, []).drop("_k")
 
 
 def meta_node_count_by_source(nodes: DataFrame, facet: str = "provided_by") -> DataFrame:
     """(category, source, count) — per-category knowledge-source counts
     (meta_knowledge_graph.py:224,317-322,400-445; nodes default to the
-    'provided_by' facet — :105-106). One explode×explode + groupBy."""
-    facet_col = (
-        F.explode(facet)
-        if dict(nodes.dtypes).get(facet, "").startswith("array")
-        else F.col(facet)
-    )
+    'provided_by' facet — :105-106)."""
     return (
-        _catalog_nodes(nodes)
-        .select(F.explode(F.array_distinct("category")).alias("category"), facet_col.alias("source"))
-        .where(F.col("category").rlike(CATEGORY_REGEX) & F.col("source").isNotNull())
-        .groupBy("category", "source")
-        .agg(F.count("*").alias("count"))
+        _node_aggregate(nodes, [facet])
+        .where(F.col("_k") == 0)
+        .select("category", F.col("_n0").alias("source"), "count")
     )
 
 
@@ -101,24 +133,12 @@ def meta_edge_count_by_source(
 ) -> DataFrame:
     """(subject_category, predicate, object_category, source, count) —
     per-association knowledge-source counts (meta_knowledge_graph.py:488,
-    519,535-600; edges default to the 'knowledge_source' facet — :111-112).
-    Same unhinted catalog joins as meta_edge_stats."""
-    cats = _meta_category_catalog(nodes)
-    subj = cats.withColumnRenamed("id", "subject").withColumnRenamed("category", "subject_category")
-    obj = cats.withColumnRenamed("id", "object").withColumnRenamed("category", "object_category")
-    facet_col = (
-        F.explode(facet)
-        if dict(edges.dtypes).get(facet, "").startswith("array")
-        else F.col(facet)
-    )
-    valid = edges.where(F.col("predicate").rlike(PREDICATE_REGEX)).select(
-        "subject", "predicate", "object", facet_col.alias("source")
-    ).where(F.col("source").isNotNull())
+    519,535-600; edges default to the 'knowledge_source' facet — :111-112)."""
     return (
-        valid.join(subj, "subject")
-        .join(obj, "object")
-        .groupBy("subject_category", "predicate", "object_category", "source")
-        .agg(F.count("*").alias("count"))
+        _edge_aggregate(edges, nodes, [facet])
+        .where(F.col("_k") == 0)
+        .select("subject_category", "predicate", "object_category",
+                F.col("_e0").alias("source"), "count")
     )
 
 
@@ -169,26 +189,39 @@ def meta_knowledge_graph(
     including per-category and per-association count_by_source under the
     caller's facet properties (meta_knowledge_graph.py:100-112 defaults
     nodes to ['provided_by'] and edges to ['knowledge_source'];
-    get_graph_summary :931-941 stamps the graph name)."""
+    get_graph_summary :931-941 stamps the graph name). One Spark action
+    over one aggregate per side; facets the graph lacks count nothing."""
     node_facets = node_facet_properties or ["provided_by"]
     edge_facets = edge_facet_properties or ["knowledge_source"]
-    node_rows = meta_node_stats(nodes).collect()
-    edge_rows = meta_edge_stats(edges, nodes).collect()
+    node_present = [f for f in node_facets if f in nodes.columns]
+    edge_present = [f for f in edge_facets if f in edges.columns]
+
+    # one action: the two aggregates' stages run side by side and share the
+    # node scan
+    rows = (
+        _node_aggregate(nodes, node_present)
+        .unionByName(_edge_aggregate(edges, nodes, edge_present), allowMissingColumns=True)
+        .collect()
+    )
+    node_rows, edge_rows = [], []
     # category → facet → source → count
-    node_src: dict[str, dict[str, dict[str, int]]] = {}
-    for facet in node_facets:
-        if facet in nodes.columns:
-            for r in meta_node_count_by_source(nodes, facet).collect():
-                node_src.setdefault(r["category"], {}).setdefault(facet, {})[
-                    r["source"]
-                ] = r["count"]
+    node_src: dict[str, dict[str, dict]] = {}
     # (subject_category, predicate, object_category) → facet → source → count
-    edge_src: dict[tuple, dict[str, dict[str, int]]] = {}
-    for facet in edge_facets:
-        if facet in edges.columns:
-            for r in meta_edge_count_by_source(edges, nodes, facet).collect():
-                key = (r["subject_category"], r["predicate"], r["object_category"])
-                edge_src.setdefault(key, {}).setdefault(facet, {})[r["source"]] = r["count"]
+    edge_src: dict[tuple, dict[str, dict]] = {}
+    for r in rows:
+        k = r["_k"]
+        if r["category"] is not None:
+            if k < 0:
+                node_rows.append(r)
+            else:
+                node_src.setdefault(r["category"], {}).setdefault(node_present[k], {})[
+                    r[f"_n{k}"]
+                ] = r["count"]
+        elif k < 0:
+            edge_rows.append(r)
+        else:
+            key = (r["subject_category"], r["predicate"], r["object_category"])
+            edge_src.setdefault(key, {}).setdefault(edge_present[k], {})[r[f"_e{k}"]] = r["count"]
     return {
         "nodes": {
             r["category"]: {

@@ -8,15 +8,29 @@ Reference: kgx/graph_operations/summarize_graph.py:66-837
 - facet counts (e.g. by provided_by): 767-814
 - duplicate-node / dangling-edge detection: 700-760
 
-The reference is a streaming inspector fed one record at a time; here each
-stat is ONE groupBy over the cached nodes/edges DataFrames. The s-p-o-category
-stat needs the edge⋈node category lookup twice — the category catalog is
-node-scale, so the joins are unhinted (AQE broadcasts when actually small).
+The reference is a streaming inspector fed one record at a time; here
+``summarize_graph`` makes one Spark action over two aggregates, one per side,
+each grouped at the grain of the statistics it reports, and rolls the
+counts, totals and facets up on the driver:
+
+- nodes: ``posexplode_outer(category)`` × a stacked facet array
+  (:func:`facet_stack`: one sentinel element per record plus one element
+  per facet value) → groupBy (category, facet, value); the sentinel rows give
+  the per-category counts, and their first-position flag the node total;
+- edges: every edge enters twice — a predicate-grain marker row, which the
+  category joins never match, and an s-p-o row joined to the subject and
+  object category catalogs — then the same facet explode and one groupBy;
+  the marker rows give the edge total and per-predicate counts, the joined
+  rows the s-p-o counts and edge facets.
+
+The per-statistic DataFrame helpers below stay for callers that want one
+statistic as a DataFrame. The s-p-o joins go against a node-scale category
+catalog, so they are unhinted (AQE broadcasts when actually small).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
@@ -100,17 +114,109 @@ def dangling_edges(edges: DataFrame, nodes: DataFrame) -> DataFrame:
     return no_subj.unionByName(no_obj).distinct()
 
 
-def _with_facet(df: DataFrame, facet: str, cols: list) -> DataFrame:
-    """Append a 'value' facet column: arrays explode (sequentially — one
-    generator per select), missing property/value → 'unknown'
-    (summarize_graph.py:790-801 get_facet_counts else-branch)."""
-    if facet not in df.columns:
-        return df.select(*cols, F.lit("unknown").alias("value"))
-    if dict(df.dtypes).get(facet, "").startswith("array"):
-        return df.select(*cols, F.explode_outer(facet).alias("_v")).select(
-            *cols, F.coalesce("_v", F.lit("unknown")).alias("value")
+def _facet_values(df: DataFrame, facet: str, outer: bool) -> Column:
+    """The record's values of ``facet`` as an array. ``outer``: the
+    summary's facet semantics — arrays explode and a missing property,
+    NULL, empty array or NULL element reads 'unknown'
+    (summarize_graph.py:790-801 get_facet_counts else-branch). Otherwise
+    the meta-KG's — NULL values are dropped (meta_knowledge_graph.py:317-322)."""
+    if outer and facet not in df.columns:
+        return F.array(F.lit("unknown"))
+    c = F.col(facet)
+    is_array = dict(df.dtypes).get(facet, "").startswith("array")
+    if outer:
+        if not is_array:
+            return F.array(F.coalesce(c, F.lit("unknown")))
+        padded = F.when(F.size(c) > 0, c).otherwise(F.array(F.lit(None)))
+        return F.transform(padded, lambda x: F.coalesce(x, F.lit("unknown")))
+    values = F.coalesce(c, F.array()) if is_array else F.array(c)
+    return F.filter(values, lambda x: x.isNotNull())
+
+
+def facet_stack(df: DataFrame, facets: list[str], slot: str, outer: bool = True) -> Column:
+    """array<struct<_k, {slot}0, ..., {slot}{n-1}>> over ``df``'s record:
+    one sentinel element (``_k`` = -1, every value NULL) standing for the
+    record itself, then one element per value of each facet k (``_k`` = k,
+    the value in ``{slot}{k}`` — each facet keeps its own typed slot).
+    Exploding it and grouping by (..., :func:`facet_columns`) yields the
+    record counts AND every facet's value counts from one aggregate, with
+    rows adding up across facets instead of multiplying as chained explodes
+    would."""
+    arrays = [_facet_values(df, f, outer) for f in facets]
+    types = [t.dataType.elementType for t in df.select(*arrays).schema] if arrays else []
+    nulls = [F.lit(None).cast(t) for t in types]
+
+    def element(k: int, value: Column | None) -> Column:
+        # named_struct: field names inside a lambda must not hang on aliases
+        fields = [F.lit("_k"), F.lit(k)]
+        for j in range(len(arrays)):
+            fields += [F.lit(f"{slot}{j}"), value if j == k else nulls[j]]
+        return F.named_struct(*fields)
+
+    def tag(k: int):
+        return lambda v: element(k, v)
+
+    return F.concat(
+        F.array(element(-1, None)),
+        *[F.transform(a, tag(k)) for k, a in enumerate(arrays)],
+    )
+
+
+def facet_columns(facets: list[str], slot: str) -> list[str]:
+    """The flattened :func:`facet_stack` columns to group by."""
+    return ["_k", *[f"{slot}{j}" for j in range(len(facets))]]
+
+
+def _node_aggregate(nodes: DataFrame, facets: list[str]) -> DataFrame:
+    """(category, _k, _n…) → count, first: one groupBy. ``first``
+    counts the rows at the first category position — one per node."""
+    return (
+        nodes.select(
+            F.posexplode_outer("category").alias("_pos", "category"),
+            facet_stack(nodes, facets, "_n").alias("_f"),
         )
-    return df.select(*cols, F.coalesce(F.col(facet), F.lit("unknown")).alias("value"))
+        .select("category", "_pos", F.explode("_f").alias("_f"))
+        .select("category", "_pos", "_f.*")
+        .groupBy("category", *facet_columns(facets, "_n"))
+        .agg(
+            F.count("*").alias("count"),
+            F.sum(F.when(F.coalesce("_pos", F.lit(0)) == 0, 1).otherwise(0)).alias("first"),
+        )
+    )
+
+
+def _edge_aggregate(edges: DataFrame, nodes: DataFrame, facets: list[str]) -> DataFrame:
+    """(_spo, sc, p, oc, _k, _e…) → count: one groupBy. Each edge
+    is read once and emitted twice: ``_spo`` false is a marker row that the
+    join conditions never match (one row per edge: edge total, per-predicate
+    counts over the raw predicate); ``_spo`` true is LEFT-joined to both
+    endpoint category catalogs, so edges whose endpoints are uncategorized
+    or absent from the node catalog still count, under 'unknown'."""
+    cats = nodes.select("id", F.explode_outer("category").alias("category"))
+    spo = F.col("_spo")
+    marked = edges.select(
+        "subject", "predicate", "object",
+        facet_stack(edges, facets, "_e").alias("_f"),
+        F.explode(F.array(F.lit(False), F.lit(True))).alias("_spo"),
+    )
+    joined = (
+        marked.join(cats.alias("_s"), (F.col("subject") == F.col("_s.id")) & spo, "left")
+        .join(cats.alias("_o"), (F.col("object") == F.col("_o.id")) & spo, "left")
+    )
+    unknown = F.lit("unknown")
+    return (
+        joined.select(
+            "_spo",
+            F.coalesce("_s.category", unknown).alias("sc"),
+            F.when(spo, F.coalesce("predicate", unknown)).otherwise(F.col("predicate")).alias("p"),
+            F.coalesce("_o.category", unknown).alias("oc"),
+            # marker rows keep only the sentinel
+            F.explode(F.when(spo, F.col("_f")).otherwise(F.slice("_f", 1, 1))).alias("_f"),
+        )
+        .select("_spo", "sc", "p", "oc", "_f.*")
+        .groupBy("_spo", "sc", "p", "oc", *facet_columns(facets, "_e"))
+        .agg(F.count("*").alias("count"))
+    )
 
 
 def summarize_graph(
@@ -128,101 +234,75 @@ def summarize_graph(
     and ``predicates`` catalogs. Facet properties nest per-value counts
     under each category/predicate/spo entry and record the seen-value
     catalog at the top level (summarize_graph.py:347-355,489-515,767-801).
-    Small results only — each entry is an aggregate, not row data."""
-    cat_rows = (
-        nodes.select(F.explode_outer("category").alias("category"))
-        .groupBy("category")
-        .agg(F.count("*").alias("count"))
+    One Spark action over one aggregate per side; each collected row is an
+    aggregate, not row data."""
+    node_facets = node_facet_properties or []
+    edge_facets = edge_facet_properties or []
+
+    # one action: the two aggregates' stages run side by side and share the
+    # node scan
+    rows = (
+        _node_aggregate(nodes, node_facets)
+        .unionByName(_edge_aggregate(edges, nodes, edge_facets), allowMissingColumns=True)
         .collect()
     )
+    node_rows = [r for r in rows if r["_spo"] is None]
+    edge_rows = [r for r in rows if r["_spo"] is not None]
+
     count_by_cat = {"unknown": {"count": 0}}
-    for r in cat_rows:
-        count_by_cat[r["category"] or "unknown"] = {"count": r["count"]}
-
-    pred_rows = count_by_predicate(edges).collect()
-    count_by_pred = {"unknown": {"count": 0}}
-    for r in pred_rows:
-        count_by_pred[r["predicate"] or "unknown"] = {"count": r["count"]}
-
-    # spo with the unknown bucket: LEFT joins so edges whose endpoints are
-    # uncategorized (or absent from the node catalog) still count
-    cats = nodes.select("id", F.explode_outer("category").alias("category"))
-    subj = cats.select(F.col("id").alias("subject"), F.col("category").alias("_sc"))
-    obj = cats.select(F.col("id").alias("object"), F.col("category").alias("_oc"))
-    spo_rows = (
-        edges.select("subject", "predicate", "object")
-        .join(subj, "subject", "left")
-        .join(obj, "object", "left")
-        .groupBy(
-            F.coalesce("_sc", F.lit("unknown")).alias("sc"),
-            F.coalesce("predicate", F.lit("unknown")).alias("p"),
-            F.coalesce("_oc", F.lit("unknown")).alias("oc"),
-        )
-        .agg(F.count("*").alias("count"))
-        .collect()
-    )
-    count_by_spo = {
-        f'{r["sc"]}-{r["p"]}-{r["oc"]}': {"count": r["count"]} for r in spo_rows
-    }
-
+    total_nodes = 0
+    for r in node_rows:
+        if r["_k"] < 0:
+            count_by_cat[r["category"] or "unknown"] = {"count": r["count"]}
+            total_nodes += r["first"]
     node_stats: dict = {
-        "total_nodes": nodes.count(),
+        "total_nodes": total_nodes,
         "node_categories": sorted(k for k in count_by_cat if k != "unknown"),
         "count_by_category": count_by_cat,
     }
-    for facet in node_facet_properties or []:
-        seen: set[str] = set()
-        base = nodes.select(
-            F.explode_outer("category").alias("category"),
-            *([facet] if facet in nodes.columns else []),
-        )
-        rows = (
-            _with_facet(base, facet, ["category"])
-            .groupBy("category", "value")
-            .agg(F.count("*").alias("count"))
-            .collect()
-        )
-        for r in rows:
-            cat = r["category"] or "unknown"
-            count_by_cat.setdefault(cat, {"count": 0}).setdefault(facet, {})[
-                r["value"]
-            ] = {"count": r["count"]}
-            seen.add(r["value"])
-        node_stats[facet] = sorted(seen)
+    seen: list[set] = [set() for _ in node_facets]
+    for r in node_rows:
+        k = r["_k"]
+        if k >= 0:
+            value = r[f"_n{k}"]
+            count_by_cat.setdefault(r["category"] or "unknown", {"count": 0}).setdefault(
+                node_facets[k], {}
+            )[value] = {"count": r["count"]}
+            seen[k].add(value)
+    for facet, values in zip(node_facets, seen):
+        node_stats[facet] = sorted(values)
 
+    count_by_pred = {"unknown": {"count": 0}}
+    count_by_spo: dict = {}
+    total_edges = 0
+    for r in edge_rows:
+        if not r["_spo"]:
+            count_by_pred[r["p"] or "unknown"] = {"count": r["count"]}
+            total_edges += r["count"]
+        elif r["_k"] < 0:
+            key = f'{r["sc"]}-{r["p"]}-{r["oc"]}'
+            count_by_spo[key] = {"count": r["count"]}
     edge_stats: dict = {
-        "total_edges": edges.count(),
+        "total_edges": total_edges,
         "predicates": sorted(k for k in count_by_pred if k != "unknown"),
         "count_by_predicates": count_by_pred,
         "count_by_spo": count_by_spo,
     }
-    for facet in edge_facet_properties or []:
-        seen = set()
-        frows = (
-            _with_facet(edges, facet, ["subject", "predicate", "object"])
-            .join(subj, "subject", "left")
-            .join(obj, "object", "left")
-            .groupBy(
-                F.coalesce("_sc", F.lit("unknown")).alias("sc"),
-                F.coalesce("predicate", F.lit("unknown")).alias("p"),
-                F.coalesce("_oc", F.lit("unknown")).alias("oc"),
-                "value",
-            )
-            .agg(F.count("*").alias("count"))
-            .collect()
-        )
-        for r in frows:
-            count_by_pred.setdefault(r["p"], {"count": 0}).setdefault(facet, {})
-            fp = count_by_pred[r["p"]][facet]
-            fp.setdefault(r["value"], {"count": 0})["count"] = (
-                fp.get(r["value"], {}).get("count", 0) + r["count"]
-            )
+    seen = [set() for _ in edge_facets]
+    for r in edge_rows:
+        k = r["_k"]
+        if r["_spo"] and k >= 0:
+            facet, value = edge_facets[k], r[f"_e{k}"]
+            # per predicate, the joined rows add up across category pairs
+            fp = count_by_pred.setdefault(r["p"], {"count": 0}).setdefault(facet, {})
+            fp.setdefault(value, {"count": 0})["count"] += r["count"]
             key = f'{r["sc"]}-{r["p"]}-{r["oc"]}'
-            count_by_spo.setdefault(key, {"count": 0}).setdefault(facet, {})[
-                r["value"]
-            ] = {"count": r["count"]}
-            seen.add(r["value"])
-        edge_stats[facet] = sorted(seen)
+            count_by_spo.setdefault(key, {"count": 0}).setdefault(facet, {})[value] = {
+                "count": r["count"]
+            }
+            seen[k].add(value)
+    for facet, values in zip(edge_facets, seen):
+        edge_stats[facet] = sorted(values)
 
     return {
         "graph_name": name,

@@ -39,9 +39,14 @@ Deliberate divergences (each pinned in tests/test_validator_reference_semantics.
   of a model element (validator.py:676-684,731-744); the offline model
   snapshot carries no alias table, so the alias check is not performed.
 
-Spark design: each rule is a where() producing rows of the shared errors
-schema (entity, level, error_type, message); rules union into one errors
-DataFrame; the report is a groupBy collect_list. All Biolink knowledge
+Spark design: one select per input. Every rule is a
+``when(cond, struct(entity, level, error_type, message))`` element of an
+array (per-category rules map over the ``category`` array with
+``F.transform``); the array is null-filtered and exploded once, so
+validating a node or edge frame scans it exactly once, whatever the rule
+count. Literal vocabularies (model classes, mixins, predicates, context
+prefixes) are ``isin`` sets, which Catalyst plans as hash-set lookups. The
+report is a groupBy collect_set. All Biolink knowledge
 (known classes/predicates/mixins, slot types, context prefixes) comes from
 the precomputed model snapshot in kgx_spark.functions.biolink — no runtime
 bmt.Toolkit on executors (SURVEY.md §7.0). Type checks that the reference
@@ -73,7 +78,9 @@ REQUIRED_NODE_PROPERTIES = ("id", "category")  # validator.py:216-243
 # validator.py:246-273 + the executable battery (see module docstring)
 REQUIRED_EDGE_PROPERTIES = ("id", "subject", "predicate", "object")
 
-_ERR_SCHEMA = "entity string, level string, error_type string, message string"
+_ERRORS_TYPE = (
+    "array<struct<entity:string,level:string,error_type:string,message:string>>"
+)
 
 # The model release the offline snapshot was curated against — the same
 # default the reference pins when no release is requested (validator.py:69).
@@ -129,16 +136,37 @@ def _bare_names(curies) -> list[str]:
     return [c.split(":", 1)[1] if ":" in c else c for c in sorted(curies)]
 
 
-def _emit(
-    df: DataFrame, cond: Column, entity: Column, level: str, error_type: str, message
-) -> DataFrame:
+def _rule(cond: Column, entity: Column, error_type: str, message) -> Column:
+    """One rule: an error struct where ``cond`` holds, NULL elsewhere (the
+    reference logs every battery error at level ERROR)."""
     msg = message if isinstance(message, Column) else F.lit(message)
-    return df.where(cond).select(
-        entity.alias("entity"),
-        F.lit(level).alias("level"),
-        F.lit(error_type).alias("error_type"),
-        msg.alias("message"),
+    return F.when(cond, F.named_struct(
+        F.lit("entity"), entity,
+        F.lit("level"), F.lit("ERROR"),
+        F.lit("error_type"), F.lit(error_type),
+        F.lit("message"), msg,
+    ))
+
+
+def _prefix_in_context(col: str) -> Column:
+    """CURIE prefix of column ``col`` is registered in the Biolink JSON-LD
+    context. The ~200-literal IN list is parsed from one SQL string:
+    building it from Column literals costs a JVM round trip per literal."""
+    literals = ", ".join(
+        "'" + p.replace("\\", "\\\\").replace("'", "\\'") + "'"
+        for p in sorted(context_prefixes())
     )
+    name = col.replace("`", "``")
+    return F.expr(f"split_part(`{name}`, ':', 1) IN ({literals})")
+
+
+def _errors(df: DataFrame, rules: list[Column]) -> DataFrame:
+    """The errors DataFrame of ``rules`` (arrays of :func:`_rule` elements)
+    over ``df`` in ONE select: the arrays are concatenated, the rules that
+    did not fire (NULL) dropped, and the rest exploded once."""
+    fired = F.concat(*rules) if rules else F.array()
+    fired = F.filter(fired.cast(_ERRORS_TYPE), lambda e: e.isNotNull())
+    return df.select(F.explode(fired).alias("_e")).select("_e.*")
 
 
 #: Bare element names the reference resolves without a prefix: the model's
@@ -170,6 +198,83 @@ def _strip_prefix(col: Column) -> Column:
     return F.when(is_curie(col), curie_reference(col)).otherwise(col)
 
 
+def _node_entity(nodes: DataFrame) -> Column:
+    """The node id — the reference's node log_error entity."""
+    if "id" not in nodes.columns:
+        return F.lit("<no id>")
+    return F.coalesce(F.col("id").cast("string"), F.lit("<no id>"))
+
+
+def _edge_entity(edges: DataFrame) -> Column:
+    """f"{subject}->{object}" — the reference's edge log_error entity,
+    including Python's 'None' rendering for a missing endpoint."""
+    def side(name: str) -> Column:
+        if name not in edges.columns:
+            return F.lit("None")
+        return F.coalesce(F.col(name).cast("string"), F.lit("None"))
+    return F.concat(side("subject"), F.lit("->"), side("object"))
+
+
+def _type_rules(df: DataFrame, kind: str) -> list[Column]:
+    """Rules of :func:`validate_property_types`."""
+    dtypes = dict(df.dtypes)
+    rules: list[Column] = []
+    if kind == "node":
+        ent = _node_entity(df)
+        error_type = "INVALID_NODE_PROPERTY_VALUE_TYPE"
+        list_t, str_t = "<class 'list'>", "<class 'str'>"
+        if "id" in df.columns and dtypes["id"] != "string":
+            rules.append(_rule(
+                F.col("id").isNotNull(), ent, error_type,
+                "Node property 'id' is expected to be of type 'string'"))
+    else:
+        ent = _edge_entity(df)
+        error_type = "INVALID_EDGE_PROPERTY_VALUE_TYPE"
+        list_t, str_t = "list", "str"
+        for endpoint in ("subject", "object"):
+            if endpoint in df.columns and dtypes[endpoint] != "string":
+                rules.append(_rule(
+                    F.lit(True), ent, error_type,
+                    f"'{endpoint}' of an edge is expected to be of type 'string'"))
+
+    for col in df.columns:
+        if col not in SLOT_TYPES or col in ("id", "subject", "object"):
+            continue
+        typeof, multivalued = SLOT_TYPES[col]
+        is_array = dtypes[col].startswith("array")
+        c = F.col(col)
+        if col in _SCALAR_OR_LIST_SLOTS:
+            # either shape is valid; fall through to the value checks below
+            multivalued = is_array
+        if multivalued and not is_array:
+            rules.append(_rule(
+                c.isNotNull(), ent, error_type,
+                f"Multi-valued {kind} property '{col}' is expected to be of type '{list_t}'"))
+            continue
+        if not multivalued and is_array:
+            rules.append(_rule(
+                c.isNotNull(), ent, error_type,
+                f"Single-valued {kind} property '{col}' is expected to be of type '{str_t}'"))
+            continue
+        if typeof == "string" and not is_array and dtypes[col] != "string":
+            rules.append(_rule(
+                c.isNotNull(), ent, error_type,
+                f"{kind.capitalize()} property '{col}' is expected to be of type 'string'"))
+        elif typeof == "double" and not is_array:
+            rules.append(_rule(
+                c.isNotNull() & c.try_cast("double").isNull(), ent, error_type,
+                f"{kind.capitalize()} property '{col}' is expected to be of type 'double'"))
+        elif typeof == "uriorcurie" and dtypes[col] in ("string", "array<string>"):
+            if is_array:
+                bad = F.exists(c, lambda x: ~_is_uri_or_curie(x))
+            else:
+                bad = c.isNotNull() & ~_is_uri_or_curie(c)
+            rules.append(_rule(
+                bad, ent, error_type,
+                f"{kind.capitalize()} property '{col}' is expected to be of type 'uri' or 'CURIE'"))
+    return [F.array(*rules)] if rules else []
+
+
 def validate_property_types(df: DataFrame, kind: str = "node") -> DataFrame:
     """The type battery (validator.py:402-558), Spark-shaped.
 
@@ -189,64 +294,51 @@ def validate_property_types(df: DataFrame, kind: str = "node") -> DataFrame:
     the edge-side ones with plain 'list' / 'str' (validator.py:452,457 vs
     543,552) — both reproduced verbatim.
     """
-    spark = df.sparkSession
-    out = spark.createDataFrame([], _ERR_SCHEMA)
-    dtypes = dict(df.dtypes)
-    if kind == "node":
-        ent = F.coalesce(F.col("id").cast("string"), F.lit("<no id>")) if "id" in df.columns else F.lit("<no id>")
-        error_type = "INVALID_NODE_PROPERTY_VALUE_TYPE"
-        list_t, str_t = "<class 'list'>", "<class 'str'>"
-        if "id" in df.columns and dtypes["id"] != "string":
-            out = out.unionByName(_emit(
-                df, F.col("id").isNotNull(), ent, "ERROR", error_type,
-                "Node property 'id' is expected to be of type 'string'"))
-    else:
-        ent = _edge_entity(df)
-        error_type = "INVALID_EDGE_PROPERTY_VALUE_TYPE"
-        list_t, str_t = "list", "str"
-        for endpoint in ("subject", "object"):
-            if endpoint in df.columns and dtypes[endpoint] != "string":
-                out = out.unionByName(_emit(
-                    df, F.lit(True), ent, "ERROR", error_type,
-                    f"'{endpoint}' of an edge is expected to be of type 'string'"))
+    return _errors(df, _type_rules(df, kind))
 
-    for col in df.columns:
-        if col not in SLOT_TYPES or col in ("id", "subject", "object"):
-            continue
-        typeof, multivalued = SLOT_TYPES[col]
-        is_array = dtypes[col].startswith("array")
-        c = F.col(col)
-        if col in _SCALAR_OR_LIST_SLOTS:
-            # either shape is valid; fall through to the value checks below
-            multivalued = is_array
-        if multivalued and not is_array:
-            out = out.unionByName(_emit(
-                df, c.isNotNull(), ent, "ERROR", error_type,
-                f"Multi-valued {kind} property '{col}' is expected to be of type '{list_t}'"))
-            continue
-        if not multivalued and is_array:
-            out = out.unionByName(_emit(
-                df, c.isNotNull(), ent, "ERROR", error_type,
-                f"Single-valued {kind} property '{col}' is expected to be of type '{str_t}'"))
-            continue
-        if typeof == "string" and not is_array and dtypes[col] != "string":
-            out = out.unionByName(_emit(
-                df, c.isNotNull(), ent, "ERROR", error_type,
-                f"{kind.capitalize()} property '{col}' is expected to be of type 'string'"))
-        elif typeof == "double" and not is_array:
-            bad = c.isNotNull() & c.cast("double").isNull()
-            out = out.unionByName(_emit(
-                df, bad, ent, "ERROR", error_type,
-                f"{kind.capitalize()} property '{col}' is expected to be of type 'double'"))
-        elif typeof == "uriorcurie" and dtypes[col] in ("string", "array<string>"):
-            if is_array:
-                bad = F.exists(c, lambda x: ~_is_uri_or_curie(x))
-            else:
-                bad = c.isNotNull() & ~_is_uri_or_curie(c)
-            out = out.unionByName(_emit(
-                df, bad, ent, "ERROR", error_type,
-                f"{kind.capitalize()} property '{col}' is expected to be of type 'uri' or 'CURIE'"))
-    return out
+
+def _category_rules(
+    nodes: DataFrame, known_categories: frozenset[str], known_mixins: frozenset[str]
+) -> list[Column]:
+    """Rules of :func:`validate_categories`; the per-element checks map over
+    the category array."""
+    ent = _node_entity(nodes)
+    error_type = "INVALID_CATEGORY"
+    missing = "Node does not have a 'category' property"
+
+    if "category" not in nodes.columns:
+        return [F.array(_rule(F.lit(True), ent, error_type, missing))]
+    cat = F.col("category")
+    rules = [_rule(cat.isNull(), ent, error_type, missing)]
+    if not dict(nodes.dtypes)["category"].startswith("array"):
+        rules.append(_rule(
+            cat.isNotNull(), ent, error_type,
+            f"Node property 'category' is expected to be of type {list}"))
+        return [F.array(*rules)]
+
+    classes = [_sentencecase_py(n) for n in _bare_names(known_categories)]
+    mixins = [_sentencecase_py(n) for n in _bare_names(known_mixins)]
+    bare = F.transform(
+        F.transform(F.coalesce(cat, F.array()), _strip_prefix),
+        lambda b: F.struct(b.alias("bare"), sentence_case(b).alias("sc")),
+    )
+
+    def element_rules(e: Column) -> Column:
+        b, sc = e["bare"], e["sc"]
+        is_mixin = sc.isin(*mixins)
+
+        def msg(tail: str) -> Column:
+            return F.concat(F.lit("Category '"), b, F.lit(tail))
+
+        return F.array(
+            _rule(~b.rlike(_CAMELCASE_RE), ent, error_type,
+                  msg("' is not in CamelCase form")),
+            _rule(is_mixin, ent, error_type, msg("' is a mixin in the Biolink Model")),
+            _rule(~is_mixin & ~sc.isin(*classes), ent, error_type,
+                  msg("' is unknown in the current Biolink Model")),
+        )
+
+    return [F.array(*rules), F.flatten(F.transform(bare, element_rules))]
 
 
 def validate_categories(
@@ -267,56 +359,35 @@ def validate_categories(
     CamelCase error (its sentence-case form resolves to the Gene class) —
     both pinned by the reference battery (tests/unit/test_validator.py:447-484).
     """
-    spark = nodes.sparkSession
-    out = spark.createDataFrame([], _ERR_SCHEMA)
-    ent = F.coalesce(F.col("id").cast("string"), F.lit("<no id>")) if "id" in nodes.columns else F.lit("<no id>")
-    error_type = "INVALID_CATEGORY"
-
-    if "category" not in nodes.columns:
-        return out.unionByName(_emit(
-            nodes, F.lit(True), ent, "ERROR", error_type,
-            "Node does not have a 'category' property"))
-
-    out = out.unionByName(_emit(
-        nodes, F.col("category").isNull(), ent, "ERROR", error_type,
-        "Node does not have a 'category' property"))
-    if not dict(nodes.dtypes)["category"].startswith("array"):
-        return out.unionByName(_emit(
-            nodes, F.col("category").isNotNull(), ent, "ERROR", error_type,
-            f"Node property 'category' is expected to be of type {list}"))
-
-    class_sentence = F.array(*[
-        F.lit(_sentencecase_py(n)) for n in _bare_names(known_categories)])
-    mixin_sentence = F.array(*[
-        F.lit(_sentencecase_py(n)) for n in _bare_names(known_mixins)])
-
-    cats = nodes.select(ent.alias("_ent"), F.explode("category").alias("cat"))
-    bare = _strip_prefix(F.col("cat"))
-    cats = cats.select("_ent", bare.alias("bare"), sentence_case(bare).alias("sc"))
-    out = out.unionByName(_emit(
-        cats, ~F.col("bare").rlike(_CAMELCASE_RE), F.col("_ent"), "ERROR", error_type,
-        F.concat(F.lit("Category '"), F.col("bare"), F.lit("' is not in CamelCase form"))))
-    is_mixin = F.array_contains(mixin_sentence, F.col("sc"))
-    is_class = F.array_contains(class_sentence, F.col("sc"))
-    out = out.unionByName(_emit(
-        cats, is_mixin, F.col("_ent"), "ERROR", error_type,
-        F.concat(F.lit("Category '"), F.col("bare"),
-                 F.lit("' is a mixin in the Biolink Model"))))
-    out = out.unionByName(_emit(
-        cats, ~is_mixin & ~is_class, F.col("_ent"), "ERROR", error_type,
-        F.concat(F.lit("Category '"), F.col("bare"),
-                 F.lit("' is unknown in the current Biolink Model"))))
-    return out
+    return _errors(nodes, _category_rules(nodes, known_categories, known_mixins))
 
 
-def _edge_entity(edges: DataFrame) -> Column:
-    """f"{subject}->{object}" — the reference's edge log_error entity,
-    including Python's 'None' rendering for a missing endpoint."""
-    def side(name: str) -> Column:
-        if name not in edges.columns:
-            return F.lit("None")
-        return F.coalesce(F.col(name).cast("string"), F.lit("None"))
-    return F.concat(side("subject"), F.lit("->"), side("object"))
+def _predicate_rules(edges: DataFrame, known_predicates: frozenset[str]) -> list[Column]:
+    """Rules of :func:`validate_edge_predicates`."""
+    ent = _edge_entity(edges)
+    error_type = "INVALID_EDGE_PREDICATE"
+    missing = "Edge does not have an 'predicate' property"
+
+    if "predicate" not in edges.columns:
+        return [F.array(_rule(F.lit(True), ent, error_type, missing))]
+    pred = F.col("predicate")
+    rules = [_rule(pred.isNull(), ent, error_type, missing)]
+    if dict(edges.dtypes)["predicate"] != "string":
+        rules.append(_rule(
+            pred.isNotNull(), ent, error_type,
+            "Edge property 'edge_predicate' is expected to be of type 'string'"))
+        return [F.array(*rules)]
+
+    bare = _strip_prefix(pred)
+    snake_ok = bare.rlike(_SNAKECASE_PRED_RE)
+    present = pred.isNotNull()
+    rules += [
+        _rule(present & ~snake_ok, ent, error_type,
+              F.concat(F.lit("Edge predicate '"), bare, F.lit("' is not in snake_case form"))),
+        _rule(present & snake_ok & ~bare.isin(*_bare_names(known_predicates)), ent, error_type,
+              F.concat(F.lit("Edge predicate '"), bare, F.lit("' is not in Biolink Model"))),
+    ]
+    return [F.array(*rules)]
 
 
 def validate_edge_predicates(
@@ -327,34 +398,21 @@ def validate_edge_predicates(
     (``^([a-z_][^A-Z\\s]+_?[a-z_][^A-Z\\s]+)+$``), resolve survivors against
     the model's predicates — bare 'related_to' is valid, unknown predicates
     are ERRORs (tests/unit/test_validator.py:487-543)."""
-    spark = edges.sparkSession
-    out = spark.createDataFrame([], _ERR_SCHEMA)
-    ent = _edge_entity(edges)
-    error_type = "INVALID_EDGE_PREDICATE"
+    return _errors(edges, _predicate_rules(edges, known_predicates))
 
-    if "predicate" not in edges.columns:
-        return out.unionByName(_emit(
-            edges, F.lit(True), ent, "ERROR", error_type,
-            "Edge does not have an 'predicate' property"))
-    out = out.unionByName(_emit(
-        edges, F.col("predicate").isNull(), ent, "ERROR", error_type,
-        "Edge does not have an 'predicate' property"))
-    if dict(edges.dtypes)["predicate"] != "string":
-        return out.unionByName(_emit(
-            edges, F.col("predicate").isNotNull(), ent, "ERROR", error_type,
-            "Edge property 'edge_predicate' is expected to be of type 'string'"))
 
-    bare = _strip_prefix(F.col("predicate"))
-    known = F.array(*[F.lit(p) for p in _bare_names(known_predicates)])
-    snake_ok = bare.rlike(_SNAKECASE_PRED_RE)
-    present = F.col("predicate").isNotNull()
-    out = out.unionByName(_emit(
-        edges, present & ~snake_ok, ent, "ERROR", error_type,
-        F.concat(F.lit("Edge predicate '"), bare, F.lit("' is not in snake_case form"))))
-    out = out.unionByName(_emit(
-        edges, present & snake_ok & ~F.array_contains(known, bare), ent, "ERROR", error_type,
-        F.concat(F.lit("Edge predicate '"), bare, F.lit("' is not in Biolink Model"))))
-    return out
+def _required_rules(
+    df: DataFrame, required: tuple[str, ...], kind: str, ent: Column
+) -> list[Column]:
+    """Presence checks (divergence D-V1: NULL = absent; an empty list is
+    present, as it is for the reference's `p not in data`); whole-column
+    absence errors every record."""
+    error_type = f"MISSING_{kind.upper()}_PROPERTY"
+    return [
+        _rule(F.col(prop).isNull() if prop in df.columns else F.lit(True), ent, error_type,
+              f"Required {kind} property '{prop}' is missing")
+        for prop in required
+    ]
 
 
 def validate_node_records(
@@ -364,47 +422,32 @@ def validate_node_records(
     check_prefixes: bool = False,
 ) -> DataFrame:
     """→ errors DataFrame; empty when the graph is valid."""
-    spark = nodes.sparkSession
-    out = spark.createDataFrame([], _ERR_SCHEMA)
-    ent = F.coalesce(F.col("id").cast("string"), F.lit("<no id>")) if "id" in nodes.columns else F.lit("<no id>")
-
-    for prop in REQUIRED_NODE_PROPERTIES:
-        if prop not in nodes.columns:
-            # whole-column absence: every node errors
-            out = out.unionByName(_emit(nodes, F.lit(True), ent, "ERROR",
-                                        "MISSING_NODE_PROPERTY", f"Required node property '{prop}' is missing"))
-            continue
-        # presence check (divergence D-V1: NULL = absent; an empty list is
-        # present, as it is for the reference's `p not in data`)
-        out = out.unionByName(_emit(nodes, F.col(prop).isNull(), ent, "ERROR",
-                                    "MISSING_NODE_PROPERTY", f"Required node property '{prop}' is missing"))
+    ent = _node_entity(nodes)
+    rules = _required_rules(nodes, REQUIRED_NODE_PROPERTIES, "node", ent)
 
     # id must be a CURIE (validator.py:570-585)
     if "id" in nodes.columns and dict(nodes.dtypes)["id"] == "string":
-        out = out.unionByName(_emit(
-            nodes, F.col("id").isNotNull() & ~F.col("id").rlike(CURIE_REGEX),
-            ent, "ERROR", "INVALID_NODE_PROPERTY_VALUE",
+        node_id = F.col("id")
+        rules.append(_rule(
+            node_id.isNotNull() & ~node_id.rlike(CURIE_REGEX),
+            ent, "INVALID_NODE_PROPERTY_VALUE",
             "Node property 'id' is expected to be of type 'CURIE'"))
-
         if check_prefixes:
             # CURIE prefix must be registered in the Biolink JSON-LD context
-            # (validator.py:577-584) — broadcastable literal set; the message
-            # is the reference's verbatim (note its missing 'that').
-            prefix = F.split_part("id", F.lit(":"), F.lit(1))
-            known_prefix = F.array_contains(
-                F.array(*[F.lit(p) for p in sorted(context_prefixes())]), prefix
-            )
-            out = out.unionByName(_emit(
-                nodes, F.col("id").isNotNull() & F.col("id").rlike(CURIE_REGEX) & ~known_prefix,
-                ent, "ERROR", "INVALID_NODE_PROPERTY_VALUE",
-                F.concat(F.lit("Node property 'id' has a value '"), F.col("id"),
+            # (validator.py:577-584); the message is the reference's verbatim
+            # (note its missing 'that').
+            prefix = F.split_part(node_id, F.lit(":"), F.lit(1))
+            rules.append(_rule(
+                node_id.isNotNull() & node_id.rlike(CURIE_REGEX) & ~_prefix_in_context("id"),
+                ent, "INVALID_NODE_PROPERTY_VALUE",
+                F.concat(F.lit("Node property 'id' has a value '"), node_id,
                          F.lit("' with a CURIE prefix '"), prefix,
                          F.lit("' is not represented in Biolink Model JSON-LD context"))))
 
-    out = out.unionByName(validate_categories(nodes, known_categories))
+    arrays = [F.array(*rules), *_category_rules(nodes, known_categories, KNOWN_MIXINS)]
     if check_types:
-        out = out.unionByName(validate_property_types(nodes, "node"))
-    return out
+        arrays += _type_rules(nodes, "node")
+    return _errors(nodes, arrays)
 
 
 def validate_edge_records(
@@ -413,47 +456,34 @@ def validate_edge_records(
     check_types: bool = False,
     check_prefixes: bool = False,
 ) -> DataFrame:
-    spark = edges.sparkSession
-    out = spark.createDataFrame([], _ERR_SCHEMA)
+    """→ errors DataFrame; empty when the graph is valid."""
     ent = _edge_entity(edges)
     dtypes = dict(edges.dtypes)
-
-    for prop in REQUIRED_EDGE_PROPERTIES:
-        if prop not in edges.columns:
-            out = out.unionByName(_emit(edges, F.lit(True), ent, "ERROR",
-                                        "MISSING_EDGE_PROPERTY", f"Required edge property '{prop}' is missing"))
-            continue
-        out = out.unionByName(_emit(edges, F.col(prop).isNull(), ent, "ERROR",
-                                    "MISSING_EDGE_PROPERTY", f"Required edge property '{prop}' is missing"))
+    rules = _required_rules(edges, REQUIRED_EDGE_PROPERTIES, "edge", ent)
 
     # subject/object CURIE-ness + prefix-vs-context (validator.py:586-627)
-    prefixes = F.array(*[F.lit(p) for p in sorted(context_prefixes())])
     for prop in ("subject", "object"):
         if prop not in edges.columns or dtypes[prop] != "string":
             continue
         c = F.col(prop)
-        out = out.unionByName(_emit(
-            edges, c.isNotNull() & ~c.rlike(CURIE_REGEX),
-            ent, "ERROR", "INVALID_EDGE_PROPERTY_VALUE",
+        rules.append(_rule(
+            c.isNotNull() & ~c.rlike(CURIE_REGEX),
+            ent, "INVALID_EDGE_PROPERTY_VALUE",
             F.concat(F.lit(f"Edge property '{prop}' has a value '"), c,
                      F.lit("' which is not a proper CURIE"))))
         if check_prefixes:
-            prefix = F.split_part(prop, F.lit(":"), F.lit(1))
-            out = out.unionByName(_emit(
-                edges, c.isNotNull() & c.rlike(CURIE_REGEX) & ~F.array_contains(prefixes, prefix),
-                ent, "ERROR", "INVALID_EDGE_PROPERTY_VALUE",
+            prefix = F.split_part(c, F.lit(":"), F.lit(1))
+            rules.append(_rule(
+                c.isNotNull() & c.rlike(CURIE_REGEX) & ~_prefix_in_context(prop),
+                ent, "INVALID_EDGE_PROPERTY_VALUE",
                 F.concat(F.lit(f"Edge property '{prop}' has a value '"), c,
                          F.lit("' with a CURIE prefix '"), prefix,
                          F.lit("' that is not represented in Biolink Model JSON-LD context"))))
 
-    out = out.unionByName(validate_edge_predicates(edges, known_predicates))
+    arrays = [F.array(*rules), *_predicate_rules(edges, known_predicates)]
     if check_types:
-        out = out.unionByName(validate_edge_records_types(edges))
-    return out
-
-
-def validate_edge_records_types(edges: DataFrame) -> DataFrame:
-    return validate_property_types(edges, "edge")
+        arrays += _type_rules(edges, "edge")
+    return _errors(edges, arrays)
 
 
 def error_report(errors: DataFrame) -> DataFrame:

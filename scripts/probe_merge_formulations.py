@@ -44,7 +44,10 @@ def main() -> None:
     n = int(master.split("[")[1].rstrip("]")) if "[" in master else 16
     spark = get_spark("merge-formulations", master=master, shuffle_partitions=n)
     canon = spark.read.parquet(canonical).select("subject", "predicate", "object", "provided_by")
-    rows = canon.count()  # warm page cache
+    # warm the page cache with every column the formulations read (a
+    # count() would prune them all)
+    canon.write.format("noop").mode("overwrite").save()
+    rows = canon.count()
     key = ["subject", "predicate", "object"]
 
     def noop(df):
@@ -106,7 +109,7 @@ def main() -> None:
             walls[name].append(round(time.monotonic() - t0, 2))
             b = cpu_counters()
             d = [y - x for x, y in zip(a, b)]
-            steals[name].append(round(32 * d[7] / max(sum(d), 1), 2))
+            steals[name].append(round(n * d[7] / max(sum(d), 1), 2))
     print(json.dumps({"master": master, "rows": rows, "walls": walls, "steals": steals}))
 
 
